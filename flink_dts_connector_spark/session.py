@@ -16,6 +16,18 @@ from pyspark.sql import SparkSession
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def _default_driver_mem() -> str:
+    """48g, capped at half the box's physical memory. A heap cap above the
+    box's RAM lets G1 keep growing the heap instead of collecting, until the
+    kernel OOM-kills the JVM; the other half is left for the Python workers
+    and the JVM's off-heap memory."""
+    try:
+        phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (ValueError, OSError, AttributeError):
+        return "48g"
+    return f"{max(1, min(48, phys // 2**31))}g"
+
+
 def get_spark(
     app_name: str = "flink-dts-connector-spark",
     cpus: int | str | None = None,
@@ -61,7 +73,7 @@ def get_spark(
         # Oracle comparison: duckdb timestamps are UTC-naive.
         .config("spark.sql.session.timeZone", "UTC")
         # local[N] = driver-only JVM; give it the box's memory.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _default_driver_mem()))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Streaming checkpoint-file checksums (new in Spark 4.1, default on)

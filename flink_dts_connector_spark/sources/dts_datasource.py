@@ -30,7 +30,6 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamReader,
     InputPartition,
-    SimpleDataSourceStreamReader,
 )
 
 from flink_dts_connector_spark.datamodel.envelope import ENVELOPE_SCHEMA
@@ -77,59 +76,15 @@ class DtsDataSourceReader(DataSourceReader):
             yield row
 
 
-class DtsStreamReader(SimpleDataSourceStreamReader):
-    """Streaming variant: the offset is the manifest of consumed file names,
-    checkpointed by Spark's WAL — replacing the reference's offset state
-    (`FlinkDtsKafkaConsumer.java:887-914`) wholesale.
-
-    A consumed-set offset (not a count/position) is deliberate: new files
-    land anywhere in name-sort order, so positional offsets re-read or skip.
-    At real scale the manifest is compacted (this is exactly what Spark's
-    own FileStreamSource does with its seen-files log)."""
-
-    def __init__(self, options: dict):
-        self._batch = DtsDataSourceReader(options)
-
-    def _files(self):
-        return [p.path for p in self._batch.partitions()]
-
-    def initialOffset(self) -> dict:
-        return {"consumed": []}
-
-    def read(self, start: dict):
-        consumed = set(start["consumed"])
-        new = [f for f in self._files() if f not in consumed]
-        end = {"consumed": sorted(consumed | set(new))}
-        return self._read_files(new), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        delta = sorted(set(end["consumed"]) - set(start["consumed"]))
-        return self._read_files(delta)
-
-    def _read_files(self, paths):
-        # pyspark's prefetch wrapper requires a PICKLABLE ITERATOR: a plain
-        # generator can't pickle, a bare list fails its next() call — a
-        # list_iterator satisfies both.
-        rows = []
-        for p in paths:
-            rows.extend(self._batch.read(_FilePartition(p)))
-        return iter(rows)
-
-    def commit(self, end: dict) -> None:
-        pass  # progress lives in the query's checkpoint WAL
-
-
 class DtsPartitionedStreamReader(DataSourceStreamReader):
     """Executor-parallel streaming reader — the scale path for
     `readStream.format("dts")`.
 
     DECODE runs on executors: `partitions()` maps each newly-discovered
     file to an input partition and `read()` executes remotely — one task
-    per file, like Spark's own FileStreamSource. The Simple reader
-    (driver-side read) is kept for tiny control-plane streams; this one is
-    what the format uses.
+    per file, like Spark's own FileStreamSource.
 
-    **Compact offsets** (unlike the Simple reader's full manifest, which
+    **Compact offsets** (not a manifest of every consumed file, which
     grows without bound on a long-lived stream): an offset is
 
         {"wm": <mtime watermark>, "recent": [paths with mtime >= wm]}

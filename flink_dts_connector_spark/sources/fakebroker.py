@@ -34,10 +34,20 @@ timestamp; the fake proves end-to-end that the union of pre- and
 post-switch reads has no gaps (duplicates allowed, README.md:26-28).
 
 The broker's "bootstrap address" IS its directory path, so
-`dts_kafka_options` output is consumed byte-identically. Logs are built
-with Spark writes (row_number per partition assigns dense offsets — one
-shuffle at build); readers are executor-parallel pyarrow scans filtered
-to the [start, end) offset range, mirroring a real consumer's fetch.
+`dts_kafka_options` output is consumed byte-identically. Each partition's
+log is a directory of parquet segments, ``log/partition=N/*.parquet``,
+with columns (value, ts_ms, offset). `create_broker` writes them with
+Spark (row_number per partition assigns dense offsets); a live producer
+appends more, continuing the partition's dense offsets, so segments hold
+disjoint offset ranges. **Segments are immutable once published**: each
+is written once, under a name that does not end in ``.parquet`` (Spark's
+``_temporary`` dir, a producer's temp file), then renamed into place —
+producers use `os.replace`. The reader's segment index relies on that:
+it reads a segment's first and last offset the first time it lists the
+segment and never again, so a trigger costs a directory listing plus the
+segments published since the previous one. Fetches are executor-parallel
+pyarrow scans of only the segments that overlap their [start, end) offset
+range, mirroring a real consumer's fetch.
 """
 
 from __future__ import annotations
@@ -49,6 +59,8 @@ import re
 from dataclasses import dataclass
 from typing import Iterator
 
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -227,9 +239,19 @@ class _FakeKafkaStreamReader(DataSourceStreamReader):
     """Offset-range streaming reader over the broker's per-partition logs.
 
     Contract enforcement happens HERE (at consumer construction, like a
-    real client): auth, auto-commit, subscription, and startup-position
-    resolution including offsetsForTimes semantics (first offset whose
-    timestamp >= the target; per-partition map requires full coverage)."""
+    real client): auth, auto-commit, subscription. Log positions come from
+    one segment index (``_segments``, the only reader of log metadata) and
+    one start resolver (``initialOffset``): every startup option becomes a
+    per-partition spec (``_start_specs``) resolved in one loop, once per
+    query, with offsetsForTimes semantics (first offset whose timestamp >=
+    the target).
+
+    With ``maxRecordsPerTrigger`` each ``latestOffset`` advances a cursor
+    by at most max/partitions offsets per partition, clamped to the log
+    end. The cursor starts at the query's start and every planned batch's
+    end raises it (a query restarted from its checkpoint re-plans its last
+    batch first), so an end offset is never below the start it is paired
+    with."""
 
     def __init__(self, options: dict):
         opts = {k.lower(): v for k, v in options.items()}
@@ -256,7 +278,10 @@ class _FakeKafkaStreamReader(DataSourceStreamReader):
         self._max_per_trigger = (
             int(opts["maxrecordspertrigger"]) if "maxrecordspertrigger" in opts else None
         )
-        self._cursor: dict[int, int] | None = None
+        #: segment path -> (first, last) offset, or None for an empty segment
+        self._bounds: dict[str, tuple[int, int] | None] = {}
+        self._start: dict[str, int] | None = None
+        self._cursor: dict[str, int] | None = None
 
     # -- auth ---------------------------------------------------------------
 
@@ -278,135 +303,123 @@ class _FakeKafkaStreamReader(DataSourceStreamReader):
         ):
             raise ValueError(f"authentication failed for {m.group(1)!r}")
 
-    # -- log metadata (driver-side) ------------------------------------------
+    # -- segment index (driver-side) -----------------------------------------
 
-    def _part_files(self, p: int) -> list[str]:
+    def _segments(self, p: int) -> list[tuple[str, int, int]]:
+        """(path, first offset, last offset) of each non-empty segment of
+        partition ``p``, in offset order. A segment never changes once
+        published, so its offsets are read the first time it is listed."""
         d = os.path.join(self.broker_dir, "log", f"partition={p}")
-        if not os.path.isdir(d):
-            return []
-        return sorted(
-            os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
-        )
+        names = os.listdir(d) if os.path.isdir(d) else []
+        segs = []
+        for path in (os.path.join(d, f) for f in names if f.endswith(".parquet")):
+            if path not in self._bounds:
+                mm = pc.min_max(pq.read_table(path, columns=["offset"])["offset"])
+                lo, hi = mm["min"].as_py(), mm["max"].as_py()
+                self._bounds[path] = None if lo is None else (lo, hi)
+            if self._bounds[path] is not None:
+                segs.append((path, *self._bounds[path]))
+        return sorted(segs, key=lambda s: s[1])
 
-    def _offset_bounds(self, p: int) -> tuple[int, int]:
-        """(earliest offset, log-end offset) — log end = max+1, Kafka-style."""
-        import pyarrow.parquet as pq
+    @staticmethod
+    def _log_end(segs: list[tuple[str, int, int]]) -> int:
+        """Kafka's log-end offset: last offset + 1 (0 for an empty log)."""
+        return segs[-1][2] + 1 if segs else 0
 
-        lo, hi = None, None
-        for f in self._part_files(p):
-            col = pq.read_table(f, columns=["offset"])["offset"]
-            if len(col) == 0:
-                continue
-            import pyarrow.compute as pc
-
-            fmin, fmax = pc.min(col).as_py(), pc.max(col).as_py()
-            lo = fmin if lo is None else min(lo, fmin)
-            hi = fmax if hi is None else max(hi, fmax)
-        return (0, 0) if lo is None else (lo, hi + 1)
-
-    def _offset_for_time(self, p: int, ts_ms: int) -> int | None:
-        """Kafka offsetsForTimes: earliest offset whose timestamp >= ts_ms."""
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
-        best = None
-        for f in self._part_files(p):
-            t = pq.read_table(f, columns=["offset", "ts_ms"])
-            mask = pc.greater_equal(t["ts_ms"], ts_ms)
-            sel = t.filter(mask)
-            if sel.num_rows:
-                cand = pc.min(sel["offset"]).as_py()
-                best = cand if best is None else min(best, cand)
-        return best
+    @staticmethod
+    def _offset_for_time(segs: list[tuple[str, int, int]], ts_ms: int) -> int | None:
+        """Kafka offsetsForTimes: earliest offset whose timestamp >= ts_ms.
+        Segments hold disjoint offset ranges in order, so the first segment
+        with a hit holds the answer."""
+        for path, _, _ in segs:
+            t = pq.read_table(path, columns=["offset", "ts_ms"])
+            hits = t.filter(pc.greater_equal(t["ts_ms"], ts_ms))["offset"]
+            if len(hits):
+                return pc.min(hits).as_py()
+        return None
 
     # -- startup position ----------------------------------------------------
 
-    def initialOffset(self) -> dict:
+    def _start_specs(self) -> dict[int, tuple[str, int]]:
+        """Every startup option as one spec per partition: ("offset", n),
+        ("earliest", 0), ("latest", 0) or ("timestamp", ms)."""
         opts, parts = self._opts, self.meta["partitions"]
-        start: dict[str, int] = {}
-        by_ts = opts.get("startingoffsetsbytimestamp")
-        global_ts = opts.get("startingtimestamp")
-        strategy = opts.get("startingoffsetsbytimestampstrategy", "error")
-        if by_ts is not None:
-            m = json.loads(by_ts).get(self.topic, {})
+        if "startingoffsetsbytimestamp" in opts:
+            m = json.loads(opts["startingoffsetsbytimestamp"]).get(self.topic, {})
             missing = [p for p in parts if str(p) not in m]
             if missing:
                 # Spark's Kafka source requires full partition coverage
                 raise ValueError(
                     f"startingOffsetsByTimestamp missing partitions {missing} of {self.topic}"
                 )
-            for p in parts:
-                off = self._offset_for_time(p, int(m[str(p)]))
-                if off is None:
-                    if strategy == "latest":
-                        off = self._offset_bounds(p)[1]
-                    else:
-                        raise ValueError(
-                            f"no offset at/after ts for partition {p} (strategy=error)"
-                        )
-                start[str(p)] = off
-        elif global_ts is not None:
-            for p in parts:
-                off = self._offset_for_time(p, int(global_ts))
-                if off is None:
-                    if strategy == "latest":
-                        off = self._offset_bounds(p)[1]
-                    else:
-                        raise ValueError(
-                            f"no offset at/after ts for partition {p} (strategy=error)"
-                        )
-                start[str(p)] = off
-        else:
-            pos = opts.get("startingoffsets", "earliest")
-            if pos == "earliest":
-                for p in parts:
-                    start[str(p)] = self._offset_bounds(p)[0]
-            elif pos == "latest":
-                for p in parts:
-                    start[str(p)] = self._offset_bounds(p)[1]
-            else:
-                # explicit per-partition JSON, Kafka-source style; honors
-                # the -2 (earliest) / -1 (latest) specials so a
-                # GROUP_OFFSETS map with never-committed partitions
-                # resolves like the real source would
-                m = json.loads(pos).get(self.topic, {})
-                for p in parts:
-                    if str(p) not in m:
-                        raise ValueError(f"startingOffsets missing partition {p}")
-                    off = int(m[str(p)])
-                    if off == -2:
-                        off = self._offset_bounds(p)[0]
-                    elif off == -1:
-                        off = self._offset_bounds(p)[1]
-                    start[str(p)] = off
-        return {"offsets": start}
+            return {p: ("timestamp", int(m[str(p)])) for p in parts}
+        if "startingtimestamp" in opts:
+            return {p: ("timestamp", int(opts["startingtimestamp"])) for p in parts}
+        pos = opts.get("startingoffsets", "earliest")
+        if pos in ("earliest", "latest"):
+            return {p: (pos, 0) for p in parts}
+        # explicit per-partition JSON, Kafka-source style; honors the -2
+        # (earliest) / -1 (latest) specials so a GROUP_OFFSETS map with
+        # never-committed partitions resolves like the real source would
+        m = json.loads(pos).get(self.topic, {})
+        specs = {}
+        for p in parts:
+            if str(p) not in m:
+                raise ValueError(f"startingOffsets missing partition {p}")
+            off = int(m[str(p)])
+            specs[p] = {-2: ("earliest", 0), -1: ("latest", 0)}.get(off, ("offset", off))
+        return specs
+
+    def initialOffset(self) -> dict:
+        # resolved once: with a rate limit the first latestOffset already
+        # seeded its cursor from it, and a "latest" start moves with the log
+        if self._start is None:
+            strategy = self._opts.get("startingoffsetsbytimestampstrategy", "error")
+            start = {}
+            for p, (kind, value) in self._start_specs().items():
+                segs = self._segments(p)
+                if kind == "timestamp":
+                    value = self._offset_for_time(segs, value)
+                    if value is None:
+                        if strategy != "latest":
+                            raise ValueError(
+                                f"no offset at/after ts for partition {p} (strategy=error)"
+                            )
+                        kind = "latest"
+                if kind == "earliest":
+                    value = segs[0][1] if segs else 0
+                elif kind == "latest":
+                    value = self._log_end(segs)
+                start[str(p)] = value
+            self._start = start
+        return {"offsets": dict(self._start)}
 
     def latestOffset(self) -> dict:
-        ends = {str(p): self._offset_bounds(p)[1] for p in self.meta["partitions"]}
+        ends = {str(p): self._log_end(self._segments(p)) for p in self.meta["partitions"]}
         if self._max_per_trigger is None:
             return {"offsets": ends}
-        # rate-limited trigger: advance an internal cursor by at most
-        # max/partitions each micro-batch (ranges are still authoritative
-        # from the WAL's (start, end) pair — a stale cursor after restart
-        # only yields empty early batches, never wrong data)
         if self._cursor is None:
-            self._cursor = {
-                str(p): self._offset_bounds(p)[0] for p in self.meta["partitions"]
-            }
+            # a new query asks for its first end before its start
+            self._cursor = self.initialOffset()["offsets"]
         step = max(1, self._max_per_trigger // max(1, len(ends)))
         self._cursor = {
-            p: min(ends[p], self._cursor[p] + step) for p in self._cursor
+            p: max(c, min(ends[p], c + step)) for p, c in self._cursor.items()
         }
         return {"offsets": dict(self._cursor)}
 
     # -- fetch ----------------------------------------------------------------
 
     def partitions(self, start: dict, end: dict):
+        if self._max_per_trigger is not None:
+            # the next batch starts at this one's end
+            cur = self._cursor or end["offsets"]
+            self._cursor = {p: max(int(o), int(cur[p])) for p, o in end["offsets"].items()}
         out = []
         for p in self.meta["partitions"]:
             s, e = int(start["offsets"][str(p)]), int(end["offsets"][str(p)])
             if e > s:
-                out.append(_FetchPartition(self._part_files(p), p, s, e, self.topic))
+                files = [f for f, lo, hi in self._segments(p) if lo < e and hi >= s]
+                out.append(_FetchPartition(files, p, s, e, self.topic))
         # Spark requires >=1 partition; an all-drained batch yields none —
         # return an empty fetch of partition 0 to represent the empty batch
         if not out:
@@ -415,35 +428,16 @@ class _FakeKafkaStreamReader(DataSourceStreamReader):
         return out
 
     def read(self, partition: _FetchPartition) -> Iterator[tuple]:
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-
         rows = []
         for f in partition.files:
             t = pq.read_table(f, columns=["offset", "ts_ms", "value"])
-            mask = pc.and_(
-                pc.greater_equal(t["offset"], partition.start),
-                pc.less(t["offset"], partition.end),
-            )
-            sel = t.filter(mask)
-            offs = sel["offset"].to_pylist()
-            tss = sel["ts_ms"].to_pylist()
-            vals = sel["value"].to_pylist()
-            for off, ts, val in zip(offs, tss, vals):
-                rows.append(
-                    (
-                        None,  # key
-                        val,
-                        partition.topic,
-                        partition.partition,
-                        off,
-                        dt.datetime.fromtimestamp(ts / 1000.0, dt.timezone.utc).replace(
-                            tzinfo=None
-                        ),
-                        0,  # CreateTime
-                        None,  # headers
-                    )
-                )
+            t = t.filter(pc.and_(
+                pc.greater_equal(t["offset"], partition.start), pc.less(t["offset"], partition.end)
+            ))
+            for off, ts, val in zip(*(t[c].to_pylist() for c in ("offset", "ts_ms", "value"))):
+                ts = dt.datetime.fromtimestamp(ts / 1000.0, dt.timezone.utc).replace(tzinfo=None)
+                # key, value, topic, partition, offset, timestamp, CreateTime, headers
+                rows.append((None, val, partition.topic, partition.partition, off, ts, 0, None))
         rows.sort(key=lambda r: r[4])
         return iter(rows)
 

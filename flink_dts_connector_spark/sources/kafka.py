@@ -9,9 +9,9 @@ Spark's Kafka source replaces the entire custom fetcher stack (partition
 discovery, offset state, handover threads — SURVEY.md §3.1): all that
 survives is this option builder and the decode step.
 
-No live Kafka exists in the test environment; `read_stream` is exercised in
-integration by substituting the file source (`sources/files.py`), which
-yields the identical downstream DataFrame shape.
+Without a live Kafka, `read_stream(source_format="kafka_fake")` runs the
+same options against the file-backed broker in `sources/fakebroker.py`,
+which yields the identical downstream DataFrame shape.
 """
 
 from __future__ import annotations
@@ -104,7 +104,6 @@ def read_stream(
     group_starting_offsets: str | None = None,
     tables: list[str] | None = None,
     ops: list[str] | None = None,
-    available_now: bool = False,
     source_format: str = "kafka",
     extra: dict[str, str] | None = None,
 ) -> DataFrame:
@@ -131,16 +130,4 @@ def read_stream(
     raw = reader.load().select(
         "value", "partition", "offset", "topic", "timestamp", "timestampType", "headers"
     )
-    return decode_cdc(raw, tables=tables, ops=ops)
-
-
-def read_batch_files(
-    spark: SparkSession,
-    path: str,
-    tables: list[str] | None = None,
-    ops: list[str] | None = None,
-) -> DataFrame:
-    """Bounded variant over parquet files of raw records (value/partition/
-    offset) — the `trigger(availableNow)` test path."""
-    raw = spark.read.parquet(path)
     return decode_cdc(raw, tables=tables, ops=ops)

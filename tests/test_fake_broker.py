@@ -391,3 +391,161 @@ def test_cdc_decode_rides_the_fake_broker(spark, sf_dir, tmp_path):
     got = {(r["id"], r["operation"]) for r in out}
     assert got == want and len(got) > 0
     assert all(r["kafka_partition"] is not None and r["kafka_offset"] is not None for r in out)
+
+
+# -- driver-side reader contract (no streaming query) -------------------------
+
+
+def _reader(broker_dir, **kw):
+    from flink_dts_connector_spark.sources.fakebroker import (
+        KAFKA_SCHEMA,
+        FakeKafkaDataSource,
+    )
+
+    opts = dts_kafka_options(
+        broker_dir, TOPIC, "SID42", None, "alice", "s3cret",
+        kw.pop("checkpoint_ts", None), kw.pop("offsets_by_timestamp", None),
+        kw.pop("group_starting_offsets", None), extra=kw.pop("extra", None),
+    )
+    return FakeKafkaDataSource(opts).streamReader(KAFKA_SCHEMA)
+
+
+def _start(broker_dir, **kw):
+    return {int(p): o for p, o in _reader(broker_dir, **kw).initialOffset()["offsets"].items()}
+
+
+def test_start_position_resolution(spark, broker):
+    """Every startup mode resolves to per-partition offsets on the driver.
+    The fixture's partitions hold 8 records each at offsets 5000..5007,
+    partition p holding rec-(3k + p) at offset 5000 + k."""
+    import json as _json
+
+    def ts(i):
+        return BASE_MS + i * 1000
+
+    assert _start(broker) == {0: 5000, 1: 5000, 2: 5000}
+    assert _start(broker, extra={"startingOffsets": "latest"}) == {0: 5008, 1: 5008, 2: 5008}
+    explicit = _json.dumps({TOPIC: {"0": 5003, "1": -2, "2": -1}})
+    assert _start(broker, group_starting_offsets=explicit) == {0: 5003, 1: 5000, 2: 5008}
+    with pytest.raises(ValueError, match="startingOffsets missing partition 2"):
+        _start(broker, group_starting_offsets=_json.dumps({TOPIC: {"0": 5003, "1": 5001}}))
+
+    # offsetsForTimes: first offset whose timestamp >= the target
+    by_ts = {"0": ts(3), "1": ts(5), "2": ts(22)}
+    assert _start(broker, offsets_by_timestamp=_json.dumps({TOPIC: by_ts})) == {
+        0: 5001, 1: 5002, 2: 5007,
+    }
+    with pytest.raises(ValueError, match=r"missing partitions \[1\]"):
+        _start(broker, offsets_by_timestamp=_json.dumps({TOPIC: {"0": ts(0), "2": ts(0)}}))
+
+    # a global timestamp past the log: "latest" gives the log end, the
+    # default strategy ("error") refuses to start
+    past_s = (BASE_MS + 60_000) // 1000
+    assert _start(broker, checkpoint_ts=past_s) == {0: 5008, 1: 5008, 2: 5008}
+    with pytest.raises(ValueError, match="strategy=error"):
+        _start(broker, extra={"startingTimestamp": str(past_s * 1000)})
+
+
+def test_live_append_is_seen_and_fetch_names_only_overlapping_segments(spark, broker):
+    """A segment published after the reader's first ``latestOffset`` (temp
+    name + ``os.replace``, as a producer does) extends the next
+    ``latestOffset``; a fetch range inside one segment names only it."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    reader = _reader(broker)
+    assert reader.latestOffset()["offsets"] == {"0": 5008, "1": 5008, "2": 5008}
+    part_dir = os.path.join(broker, "log", "partition=0")
+    (old_seg,) = [os.path.join(part_dir, f) for f in os.listdir(part_dir) if f.endswith(".parquet")]
+    tmp = os.path.join(part_dir, ".seg-5008.tmp")
+    pq.write_table(
+        pa.table({
+            "value": pa.array([b"rec-24", b"rec-27"], pa.binary()),
+            "ts_ms": pa.array([BASE_MS + 24_000, BASE_MS + 27_000], pa.int64()),
+            "offset": pa.array([5008, 5009], pa.int64()),
+        }),
+        tmp,
+    )
+    new_seg = os.path.join(part_dir, "seg-5008.parquet")
+    os.replace(tmp, new_seg)
+    assert reader.latestOffset()["offsets"] == {"0": 5010, "1": 5008, "2": 5008}
+
+    def fetch(lo, hi):
+        start = {"offsets": {"0": lo, "1": 5008, "2": 5008}}
+        end = {"offsets": {"0": hi, "1": 5008, "2": 5008}}
+        (part,) = reader.partitions(start, end)
+        return part
+
+    tail = fetch(5008, 5010)
+    assert tail.files == [new_seg]
+    assert [(r[1], r[4]) for r in reader.read(tail)] == [(b"rec-24", 5008), (b"rec-27", 5009)]
+    head = fetch(5001, 5003)
+    assert head.files == [old_seg]
+    assert [(r[1], r[4]) for r in reader.read(head)] == [(b"rec-3", 5001), (b"rec-6", 5002)]
+
+
+def _run_limited(df, ckpt, want):
+    """Run ``df`` rate-limited until ``want`` records arrived in total;
+    returns the record ids of each non-empty micro-batch."""
+    import time
+
+    batches = []
+
+    def sink(batch_df, epoch_id):
+        ids = [int(bytes(r["value"]).decode().split("-")[1]) for r in batch_df.collect()]
+        if ids:
+            batches.append(ids)
+
+    q = (
+        df.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(processingTime="0 seconds")
+        .start()
+    )
+    deadline = time.time() + 60
+    while sum(map(len, batches)) < want and time.time() < deadline and q.isActive:
+        time.sleep(0.1)
+    q.stop()
+    q.awaitTermination()
+    return batches
+
+
+@pytest.fixture()
+def broker0(spark, tmp_path):
+    """The 24-record log with offsets from 0."""
+    register_fake_broker(spark)
+    d = str(tmp_path / "broker0")
+    create_broker(spark, _mk_records(spark), d, "dstore-cluster-0", TOPIC, users=USERS, offset_base=0)
+    return d
+
+
+def test_rate_limit_starts_at_the_query_start(spark, broker0, tmp_path):
+    """``maxRecordsPerTrigger`` throttles from where the query starts: a
+    timestamp re-seek to rec-12 never rewinds to earlier records, and the
+    12 remaining records take more than one micro-batch."""
+    df = _raw_stream(
+        spark, broker0, checkpoint_ts=(BASE_MS + 12 * 1000) // 1000,
+        extra={"maxRecordsPerTrigger": "6"},
+    )
+    batches = _run_limited(df, str(tmp_path / "ckr"), 12)
+    got = [i for ids in batches for i in ids]
+    assert min(got) >= 12, f"records before the start were delivered: {sorted(got)}"
+    assert sorted(got) == list(range(12, 24))
+    assert len(batches) >= 2
+
+
+def test_rate_limit_resumes_from_the_checkpoint(spark, broker0, tmp_path):
+    """A rate-limited query restarted from its checkpoint continues where
+    it stopped: only its last batch may be delivered again (stopped
+    between sink and commit), never anything older."""
+    ckpt = str(tmp_path / "ckrr")
+    limited = {"maxRecordsPerTrigger": "3"}
+    first = _run_limited(_raw_stream(spark, broker0, extra=limited), ckpt, 9)
+    assert len(first) >= 3 and sum(map(len, first)) < 24
+    seen = {i for ids in first for i in ids}
+    rest = _run_limited(_raw_stream(spark, broker0, extra=limited), ckpt, 24 - len(seen))
+    again = {i for ids in rest for i in ids} & seen
+    assert again <= set(first[-1]), f"rewound past the checkpoint: {sorted(again)}"
+    assert seen | {i for ids in rest for i in ids} == set(range(24))
