@@ -227,9 +227,10 @@ ENVELOPE_SCHEMA = T.StructType(
     ]
 )
 
-#: Kafka record timestampType code → name (`timestamp-type` metadata column,
-#: org.apache.kafka.common.record.TimestampType names).
-KAFKA_TIMESTAMP_TYPES = {0: "NoTimestampType", 1: "CreateTime", 2: "LogAppendTime"}
+#: Kafka record timestampType id → name (`timestamp-type` metadata column):
+#: org.apache.kafka.common.record.TimestampType, whose ids Spark's Kafka
+#: source emits in `timestampType`.
+KAFKA_TIMESTAMP_TYPES = {-1: "NoTimestampType", 0: "CreateTime", 1: "LogAppendTime"}
 
 #: Raw pre-decode batch: what the Kafka (or file) source hands the decoder.
 RAW_SCHEMA = T.StructType(

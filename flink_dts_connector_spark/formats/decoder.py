@@ -3,8 +3,10 @@
 Equivalent of the reference's deserializer chain
 (`formats/raw/DtsRecordDeserializationSchema.java:11-16` for the generic
 layer, `DTSSubscribeRowDataDeserializationSchema.java:65-93` for the
-filtered layer) re-expressed as `mapInPandas`: Arrow-batched, one Python
-worker per partition, no per-row Python UDF overhead.
+filtered layer) re-expressed as `mapInArrow` over `decode_arrow`: the
+engine's Arrow batches stay columnar across the Python boundary, one Python
+worker per partition, no per-row Python UDF overhead. The `dts` data source
+yields the same function's batches.
 
 Laziness parity: `decode_cdc(..., tables=, ops=)` runs the cheap header
 decode first and only parses the payload for records that survive the
@@ -21,15 +23,20 @@ from __future__ import annotations
 
 from collections.abc import Iterator, Sequence
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from flink_dts_connector_spark.datamodel.envelope import (
     ENVELOPE_SCHEMA,
     KAFKA_TIMESTAMP_TYPES,
     OperationType,
 )
+from flink_dts_connector_spark.formats.fastdecode import CORE_COLS, decode_batch_core
 from flink_dts_connector_spark.formats.wire import (
     decode_header,
     decode_payload,
@@ -38,11 +45,76 @@ from flink_dts_connector_spark.formats.wire import (
 )
 
 _ENVELOPE_COLS = [f.name for f in ENVELOPE_SCHEMA.fields]
+_ARROW_SCHEMA = to_arrow_schema(ENVELOPE_SCHEMA)
 
 #: Kafka metadata columns carried through from the raw source when present —
 #: the Spark Kafka source's own names (table/DtsDynamicSource.java:268-345
-#: readable-metadata parity; `headers` needs .option("includeHeaders", true)).
-_META_COLS = ("partition", "offset", "topic", "timestamp", "timestampType", "headers")
+#: readable-metadata parity; `headers` needs .option("includeHeaders", true))
+#: → their envelope columns.
+_META_COLS = {
+    "partition": "kafka_partition",
+    "offset": "kafka_offset",
+    "topic": "kafka_topic",
+    "timestamp": "kafka_timestamp",
+    "timestampType": "kafka_timestamp_type",
+    "headers": "kafka_headers",
+}
+
+
+def _headers_map(h: pa.ListArray) -> pa.MapArray:
+    """Kafka headers array<struct<key,value>> → MAP<STRING, BYTES> from the
+    list's entries and struct fields. Kafka allows a repeated header key and
+    a map does not: the last value wins, as in `_headers_to_map`."""
+    entries, parents = h.flatten(), pc.list_parent_indices(h)
+    keys = entries.field("key")
+    last = (
+        pa.table({"p": parents, "k": keys, "i": np.arange(len(keys))})
+        .group_by(["p", "k"], use_threads=False)
+        .aggregate([("i", "max")])["i_max"]
+    )
+    pos = np.sort(last.to_numpy())
+    lengths = np.bincount(parents.to_numpy()[pos], minlength=len(h))
+    offsets = pa.array(
+        np.concatenate(([0], np.cumsum(lengths))), pa.int32(),
+        mask=np.append(h.is_null().to_numpy(zero_copy_only=False), False),
+    )
+    return pa.MapArray.from_arrays(offsets, keys.take(pos), entries.field("value").take(pos))
+
+
+def decode_arrow(
+    batch: pa.RecordBatch,
+    tables: frozenset[str] | None,
+    ops: frozenset[str] | None,
+    columns: frozenset[str] | None = None,
+    skip_errors: bool = False,
+    images: bool = True,
+) -> pa.RecordBatch:
+    """Decode one Arrow batch of raw records into an envelope batch: the
+    fused decode+render core (formats/fastdecode.py) runs on the ``value``
+    column, and the Kafka metadata columns ride through as ``take(kept)``
+    of the survivor indices. Output is pinned equal to
+    `_decode_batch_reference` by
+    tests/test_cdc_pipeline.py::test_fastdecode_parity."""
+    out, kept = decode_batch_core(
+        batch.column("value").to_pylist(), tables, ops, columns,
+        skip_errors=skip_errors, images=images,
+    )
+    cols = [pa.array(out[c], _ARROW_SCHEMA.field(c).type) for c in CORE_COLS]
+    kept = pa.array(kept, pa.int64())
+    for src, dst in _META_COLS.items():
+        typ = _ARROW_SCHEMA.field(dst).type
+        if src not in batch.schema.names:
+            cols.append(pa.nulls(len(kept), typ))
+            continue
+        col = batch.column(src).take(kept)
+        if src == "timestampType":
+            codes, col = col, col.cast(pa.string())
+            for code, name in KAFKA_TIMESTAMP_TYPES.items():
+                col = pc.if_else(pc.equal(codes, code), name, col)
+        elif src == "headers":
+            col = _headers_map(col)
+        cols.append(col.cast(typ))
+    return pa.RecordBatch.from_arrays(cols, schema=_ARROW_SCHEMA)
 
 
 def _headers_to_map(h) -> dict[str, bytes] | None:
@@ -66,76 +138,6 @@ def _headers_to_map(h) -> dict[str, bytes] | None:
 
 def _opt_int(v) -> int | None:
     return None if v is None or pd.isna(v) else int(v)
-
-
-def _decode_batch(
-    raw_values: Sequence[bytes],
-    meta: dict[str, Sequence],
-    tables: frozenset[str] | None,
-    ops: frozenset[str] | None,
-    columns: frozenset[str] | None = None,
-    skip_errors: bool = False,
-    images: bool = True,
-) -> dict[str, list]:
-    """Fast path: fused decode+render core (formats/fastdecode.py, ~2× the
-    reference loop below) + kafka-metadata alignment from the survivor
-    indices. Output is pinned bit-equal to `_decode_batch_reference` by
-    tests/test_cdc_pipeline.py::test_fastdecode_parity."""
-    import datetime as dt
-
-    from flink_dts_connector_spark.formats.fastdecode import decode_batch_core
-
-    out, kept = decode_batch_core(
-        raw_values, tables, ops, columns, skip_errors=skip_errors, images=images
-    )
-    parts = meta.get("partition")
-    offs = meta.get("offset")
-    topics = meta.get("topic")
-    ktss = meta.get("timestamp")
-    kts_types = meta.get("timestampType")
-    headers = meta.get("headers")
-    n = len(kept)
-    out["kafka_partition"] = (
-        [_opt_int(parts[i]) for i in kept] if parts is not None else [None] * n
-    )
-    out["kafka_offset"] = [_opt_int(offs[i]) for i in kept] if offs is not None else [None] * n
-    out["kafka_topic"] = (
-        [
-            None
-            if topics[i] is None or (isinstance(topics[i], float) and pd.isna(topics[i]))
-            else str(topics[i])
-            for i in kept
-        ]
-        if topics is not None
-        else [None] * n
-    )
-    if ktss is not None:
-        col = []
-        for i in kept:
-            kts = ktss[i]
-            if kts is None or pd.isna(kts):
-                kts = None
-            else:
-                if isinstance(kts, pd.Timestamp):
-                    kts = kts.to_pydatetime()
-                if kts.tzinfo is not None:
-                    kts = kts.astimezone(dt.timezone.utc).replace(tzinfo=None)
-            col.append(kts)
-        out["kafka_timestamp"] = col
-    else:
-        out["kafka_timestamp"] = [None] * n
-    if kts_types is not None:
-        col = []
-        for i in kept:
-            ktt = _opt_int(kts_types[i])
-            col.append(None if ktt is None else KAFKA_TIMESTAMP_TYPES.get(ktt, str(ktt)))
-        out["kafka_timestamp_type"] = col
-    else:
-        out["kafka_timestamp_type"] = [None] * n
-    out["kafka_headers"] = (
-        [_headers_to_map(headers[i]) for i in kept] if headers is not None else [None] * n
-    )
-    return out
 
 
 def _decode_batch_reference(
@@ -296,22 +298,13 @@ def decode_cdc(
     )
     col_set = frozenset(columns) if columns is not None else None
     present = [c for c in _META_COLS if c in raw_df.columns]
+    skip_errors = on_error == "skip"
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            # positional lists, not Series: _decode_batch indexes by position
-            meta = {c: pdf[c].to_list() for c in present}
-            out = _decode_batch(
-                pdf["value"], meta, table_set, op_set, col_set,
-                skip_errors=(on_error == "skip"), images=images,
-            )
-            if not out["id"]:
-                # fully-filtered batch: yield nothing — an empty pandas frame
-                # would carry float64 dtypes Arrow can't cast to timestamp
-                continue
-            yield pd.DataFrame(out, columns=_ENVELOPE_COLS)
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            yield decode_arrow(batch, table_set, op_set, col_set, skip_errors, images)
 
-    return raw_df.mapInPandas(fn, schema=ENVELOPE_SCHEMA)
+    return raw_df.select("value", *present).mapInArrow(fn, schema=ENVELOPE_SCHEMA)
 
 
 def decode_cdc_prefiltered(

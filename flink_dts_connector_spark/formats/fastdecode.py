@@ -1,5 +1,5 @@
 """Fused wire decode+render — the measured fast path behind
-`decoder._decode_batch`.
+`decoder.decode_arrow`.
 
 Same wire format, same outputs, bit-for-bit (pinned against the reference
 implementation by `tests/test_cdc_pipeline.py::test_fastdecode_parity`);
@@ -28,9 +28,9 @@ architectural, not spot fixes:
   * epoch→datetime conversions are memoized (commit timestamps repeat
     heavily within a transaction).
 
-Decode stays stateless per batch and Arrow-batched via `mapInPandas`
-(decoder.py) — this changes per-core throughput only, not the scale-out
-story.
+Decode stays stateless per batch and Arrow-batched via `mapInArrow` over
+`decoder.decode_arrow`, which the `dts` data source also yields — this
+changes per-core throughput only, not the scale-out story.
 """
 
 from __future__ import annotations

@@ -25,6 +25,7 @@ import os
 from dataclasses import dataclass
 from typing import Iterator
 
+import pyarrow as pa
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -60,20 +61,14 @@ class DtsDataSourceReader(DataSourceReader):
             raise ValueError(f"no parquet files under {self.path}")
         return [_FilePartition(p) for p in files]
 
-    def read(self, partition: _FilePartition) -> Iterator[tuple]:
+    def read(self, partition: _FilePartition) -> Iterator[pa.RecordBatch]:
         # executor-side: read one raw file, decode with the shared pipeline
         import pyarrow.parquet as pq
 
-        from flink_dts_connector_spark.formats.decoder import _decode_batch
+        from flink_dts_connector_spark.formats.decoder import decode_arrow
 
-        tbl = pq.read_table(partition.path)
-        d = tbl.to_pydict()
-        values = d["value"]
-        meta = {k: v for k, v in d.items() if k != "value"}
-        out = _decode_batch(values, meta, self.tables, self.ops)
-        cols = [out[f.name] for f in ENVELOPE_SCHEMA.fields]
-        for row in zip(*cols):
-            yield row
+        for batch in pq.read_table(partition.path).to_batches():
+            yield decode_arrow(batch, self.tables, self.ops)
 
 
 class DtsPartitionedStreamReader(DataSourceStreamReader):
@@ -152,7 +147,7 @@ class DtsPartitionedStreamReader(DataSourceStreamReader):
                 new.append(p)
         return [_FilePartition(p) for p in new]
 
-    def read(self, partition: _FilePartition) -> Iterator[tuple]:
+    def read(self, partition: _FilePartition) -> Iterator[pa.RecordBatch]:
         # executor-side: identical decode body as the batch reader
         return self._batch.read(partition)
 

@@ -566,7 +566,7 @@ def generate_cdc_bytes(
                 cols.update(
                     topic=[TOPIC] * len(values),
                     timestamp=ktss,
-                    timestampType=[1] * len(values),  # CreateTime
+                    timestampType=[0] * len(values),  # CreateTime
                     headers=hdrs,
                 )
             yield pd.DataFrame(cols)

@@ -9,8 +9,10 @@ re-seeks BY TIMESTAMP instead of trusting the stored offset
 duplicates are allowed but gaps are not, README.md:26-28).
 
 Spark equivalents:
-  * progress tracking: a StreamingQueryListener records per-partition
-    (offset, max event ts) each micro-batch — our "offset@timestamp" state;
+  * progress tracking: `DtsProgressTracker` holds per-partition
+    (offset, max event ts) — our "offset@timestamp" state. The caller feeds
+    it from ``foreachBatch``: `update_from_batch` with each micro-batch's
+    per-partition maxima, then `save`;
   * cluster-switch detection: compare Kafka cluster id between runs (the
     reference throws from a ConsumerInterceptor; we detect at restart);
   * recovery: restart the query with ``startingOffsetsByTimestamp`` built

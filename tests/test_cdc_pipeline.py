@@ -271,11 +271,20 @@ def test_partitioned_stream_offsets_stay_compact(tmp_path):
 
 
 def test_fastdecode_parity():
-    """The fused fast decoder (formats/fastdecode.py) must be bit-equal to
-    the reference per-record loop across the full value zoo, v1 records,
-    filters (ops/tables/columns), header-only mode, poison-pill skips and
-    kafka-metadata alignment after filtering."""
+    """The Arrow batch decode (`decode_arrow` on formats/fastdecode.py) must
+    equal the reference per-record loop across the full value zoo, v1
+    records, filters (ops/tables/columns), header-only mode, poison-pill
+    skips and kafka-metadata alignment after filtering — including Kafka
+    headers (non-empty, empty, null, a repeated key), every timestampType
+    id plus null, and a null Kafka timestamp.
+
+    Normalisation, applied to the Arrow side only: maps come back from
+    Arrow as (key, value) pair lists and become dicts (a repeated key would
+    fail the test, so last-value-wins is pinned, not hidden); timestamps
+    come back UTC-aware and become naive UTC, the reference's form."""
     import datetime as dt
+
+    import pyarrow as pa
 
     from flink_dts_connector_spark.datamodel.envelope import (
         OperationType,
@@ -283,8 +292,8 @@ def test_fastdecode_parity():
         ValueKind,
     )
     from flink_dts_connector_spark.formats.decoder import (
-        _decode_batch,
         _decode_batch_reference,
+        decode_arrow,
     )
     from flink_dts_connector_spark.formats.wire import CdcRecord, FieldDef, encode_record
     from flink_dts_connector_spark.sources.zoo import ZOO_CASES
@@ -320,14 +329,48 @@ def test_fastdecode_parity():
     poison = [b"\xd7\x02\x00garbage", raws[0][:10]]
     n = len(raws) + len(poison)
     all_raws = raws + poison
+    header_cycle = [
+        [{"key": "record_id", "value": b"r"}, {"key": "trace", "value": b"t"}],
+        [],
+        None,
+        # a repeated key: the last value wins
+        [{"key": "k", "value": b"first"}, {"key": "j", "value": None},
+         {"key": "k", "value": b"last"}],
+        [{"key": "only", "value": b""}],
+    ]
     meta = {
         "partition": [i % 4 for i in range(n)],
         "offset": list(range(n)),
         "topic": ["t"] * n,
-        "timestamp": [dt.datetime(2024, 1, 1, 0, 0, i % 60) for i in range(n)],
-        "timestampType": [0] * n,
-        "headers": [None] * n,
+        "timestamp": [
+            None if i == 5 else dt.datetime(2024, 1, 1, 0, 0, i % 60) for i in range(n)
+        ],
+        "timestampType": [(-1, 0, 1, None)[i % 4] for i in range(n)],
+        "headers": [header_cycle[i % len(header_cycle)] for i in range(n)],
     }
+    # the Spark Kafka source's Arrow shape, as mapInArrow hands it over
+    kafka_arrow = pa.schema([
+        ("value", pa.binary()),
+        ("partition", pa.int32()),
+        ("offset", pa.int64()),
+        ("topic", pa.string()),
+        ("timestamp", pa.timestamp("us", tz="UTC")),
+        ("timestampType", pa.int32()),
+        ("headers", pa.list_(pa.struct([("key", pa.string()), ("value", pa.binary())]))),
+    ])
+    batch = pa.RecordBatch.from_pydict({"value": all_raws, **meta}, schema=kafka_arrow)
+
+    def normalise(v, typ):
+        if v is None:
+            return None
+        if pa.types.is_map(typ):
+            d = dict(v)
+            assert len(d) == len(v), f"repeated map key in {v}"
+            return d
+        if pa.types.is_timestamp(typ):
+            return v.astimezone(dt.timezone.utc).replace(tzinfo=None)
+        return v
+
     cases = [
         dict(tables=None, ops=None),
         dict(tables=None, ops=frozenset({"INSERT", "DELETE"})),
@@ -337,17 +380,27 @@ def test_fastdecode_parity():
         dict(tables=None, ops=None, images=False),
     ]
     for kw in cases:
-        fast = _decode_batch(all_raws, meta, skip_errors=True, **kw)
+        out = decode_arrow(batch, skip_errors=True, **kw)
         ref = _decode_batch_reference(all_raws, meta, skip_errors=True, **kw)
-        assert set(fast) == set(ref)
+        assert set(out.schema.names) == set(ref)
         for c in ref:
-            assert fast[c] == ref[c], f"column {c} diverges under {kw}"
-        assert len(fast["id"]) > 0
+            typ = out.schema.field(c).type
+            got = [normalise(v, typ) for v in out.column(c).to_pylist()]
+            assert got == ref[c], f"column {c} diverges under {kw}"
+        assert out.num_rows > 0
+    # the metadata inputs are all exercised on the unfiltered case
+    full = _decode_batch_reference(all_raws, meta, tables=None, ops=None, skip_errors=True)
+    assert set(full["kafka_timestamp_type"]) == {
+        "NoTimestampType", "CreateTime", "LogAppendTime", None
+    }
+    assert None in full["kafka_timestamp"]
+    assert {"k": b"last", "j": None} in full["kafka_headers"]
+    assert {} in full["kafka_headers"] and None in full["kafka_headers"]
     # fail-loudly parity on poison input
     import pytest as _pytest
 
     with _pytest.raises(Exception):
-        _decode_batch(all_raws, meta)
+        decode_arrow(batch, None, None)
 
 
 def test_txn_fixture_interleaves_and_manifest_is_atomic(spark):

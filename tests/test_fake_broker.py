@@ -374,7 +374,11 @@ def test_cdc_decode_rides_the_fake_broker(spark, sf_dir, tmp_path):
     out = []
 
     def sink(batch_df, epoch_id):
-        out.extend(batch_df.select("id", "operation", "kafka_partition", "kafka_offset").collect())
+        out.extend(
+            batch_df.select(
+                "id", "operation", "kafka_partition", "kafka_offset", "kafka_timestamp_type"
+            ).collect()
+        )
 
     q = (
         env.writeStream.foreachBatch(sink)
@@ -391,6 +395,8 @@ def test_cdc_decode_rides_the_fake_broker(spark, sf_dir, tmp_path):
     got = {(r["id"], r["operation"]) for r in out}
     assert got == want and len(got) > 0
     assert all(r["kafka_partition"] is not None and r["kafka_offset"] is not None for r in out)
+    # the broker stamps Kafka's CreateTime id (0), as a real cluster does
+    assert {r["kafka_timestamp_type"] for r in out} == {"CreateTime"}
 
 
 # -- driver-side reader contract (no streaming query) -------------------------
